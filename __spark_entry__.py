@@ -1049,9 +1049,9 @@ def q_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full kargo_spark KG pipeline (mapInPandas NLP + candidate mining +
-    tf-idf + pairs + triples) over the documents table re-shaped to the
-    north-rule input schema."""
+    """Full kargo_spark KG pipeline (one mapInArrow pass for NLP +
+    candidate mining, then tf-idf + pairs + triples) over the documents
+    table re-shaped to the north-rule input schema."""
     from kargo_spark.pipeline import run_pipeline
 
     d = _docs(spark, sf_dir)

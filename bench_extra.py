@@ -82,7 +82,7 @@ def run_stages() -> dict:
 
     from kargo_spark import candidates as C
     from kargo_spark import corpus, nlp, relations, weighting
-    from kargo_spark.skew import size_bucketed
+    from kargo_spark.pipeline import annotated_sentences
 
     spark = _spark("kargo_stage_decomp")
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -97,18 +97,15 @@ def run_stages() -> dict:
         dc = corpus.docs_clean(src)
         if upto == "docs_clean":
             return dc
-        tokens = nlp.tokenize(size_bucketed(dc, "content"))
-        if upto == "tokens":
-            return tokens
-        sentences = nlp.sentences_with_tokens(tokens)
+        # persisted as in the pipeline; each rep's clearCache() drops it
+        sentences = annotated_sentences(dc)
         if upto == "sentences":
             return sentences
         cands = C.filter_candidates(
-            C.mine_candidates(sentences), stopwords=C.DEFAULT_STOPWORDS
+            nlp.candidates_of(sentences), stopwords=C.DEFAULT_STOPWORDS
         )
         if upto == "candidates":
             return cands
-        sentences = sentences.persist()
         cands = cands.persist()
         df_tab, _ = weighting.document_frequency(cands)
         n_docs = dc.count()
@@ -121,12 +118,13 @@ def run_stages() -> dict:
         ments = relations.mentions(cands, topk)
         if upto == "mentions":
             return ments
-        prs = relations.pairs(ments, sentences)
+        prs = relations.pairs(ments, sentences.select("doc_id", "sentence_id", "toks"))
         if upto == "pairs":
             return prs
         return relations.triples_from_pairs(prs)
 
-    stages = ["docs_clean", "tokens", "sentences", "candidates", "scores",
+    # the tf-idf chain never reads the flat token table, so it has no prefix
+    stages = ["docs_clean", "sentences", "candidates", "scores",
               "topk", "mentions", "pairs", "triples"]
     _noop(chain("triples"))  # warm
     spark.catalog.clearCache()

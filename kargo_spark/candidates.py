@@ -1,4 +1,4 @@
-"""Candidate term mining: ``tokens -> candidates``.
+"""Candidate term mining: ``annotated sentences -> candidates``.
 
 Reimplements the pke grammar-selection + filtering semantics
 (reference terms.py:99-158, grammar at main.py:99-102:
@@ -7,8 +7,10 @@ POS alphabet per sentence — the vectorization trick SURVEY.md §2.9 calls
 for: each sentence's tag sequence becomes a string like ``"NNAJVN"`` and
 noun-phrase chunks are regex matches, no per-token Python branching.
 
-Runs as ``mapInPandas`` over sentence-grouped token arrays; emits one row
-per candidate occurrence:
+The chunker (``chunk_terms``) runs inside ``nlp.annotate``'s Arrow pass
+on each sentence as it is annotated; ``mine_candidates`` runs the same
+helper as a ``mapInPandas`` over an already sentence-grouped token table.
+Either way there is one row per candidate occurrence:
 
     (doc_id, sentence_id, term, lemma_term, tok_begin, tok_end,
      offset_begin, offset_end)
@@ -40,26 +42,33 @@ _TAG_CHAR = {"NOUN": "N", "PROPN": "P", "ADJ": "A", "NUM": "M"}
 _CHUNK = re.compile(r"[ANMP]*[NP]")
 
 
+def chunk_terms(token_id, word, lemma, pos, begin, end) -> list[tuple]:
+    """Noun-phrase chunks of ONE sentence, its tokens given as parallel
+    sequences in token order; returns the 7 per-candidate fields of
+    CANDIDATES_SCHEMA (term .. offset_end). The single chunk/term builder:
+    ``nlp.annotate`` runs it on the annotator's per-sentence buffer,
+    ``mine_candidates`` on a regrouped token array."""
+    tag_str = "".join(_TAG_CHAR.get(p, "x") for p in pos)
+    out = []
+    for m in _CHUNK.finditer(tag_str):
+        b, e = m.span()  # token index span [b, e)
+        out.append((
+            " ".join(w.lower() for w in word[b:e]),
+            " ".join(lemma[b:e]),
+            e - b,
+            token_id[b],
+            token_id[e - 1],
+            begin[b],
+            end[e - 1],
+        ))
+    return out
+
+
 def _mine_sentence(doc_id, sent_id, toks: np.ndarray, out: list) -> None:
     # toks: array of (token_id, word, lemma, pos, offset_begin, offset_end) rows
-    tag_str = "".join(_TAG_CHAR.get(t["pos"], "x") for t in toks)
-    for m in _CHUNK.finditer(tag_str):
-        b, e = m.start(), m.end()  # token index span [b, e)
-        words = [toks[i]["word"] for i in range(b, e)]
-        lemmas = [toks[i]["lemma"] for i in range(b, e)]
-        out.append(
-            (
-                doc_id,
-                sent_id,
-                " ".join(w.lower() for w in words),
-                " ".join(lemmas),
-                e - b,
-                int(toks[b]["token_id"]),
-                int(toks[e - 1]["token_id"]),
-                int(toks[b]["offset_begin"]),
-                int(toks[e - 1]["offset_end"]),
-            )
-        )
+    cols = [[t[f] for t in toks] for f in (
+        "token_id", "word", "lemma", "pos", "offset_begin", "offset_end")]
+    out.extend((doc_id, sent_id, *c) for c in chunk_terms(*cols))
 
 
 def _mine_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,12 +1,16 @@
-"""NLP annotation stage: ``docs_clean -> sentences -> tokens``.
+"""NLP annotation stage: ``docs_clean -> annotated sentences -> {tokens, candidates}``.
 
 The reference runs a stanza pipeline per document (reference corpus.py:
 227-232, 445-492: tokenize / POS / lemma, ``tokenize_no_ssplit=True`` after
 nltk sentence split at corpus.py:513). Heavy NLP models are not available
 in this environment and are not the point — the engine contract is the
-*stage shape*: an Arrow-vectorized ``mapInPandas`` that turns 1 document
-row into N token rows (UDTF-shaped), loading any per-worker state once per
-partition, never per row.
+*stage shape*: one Arrow-vectorized ``mapInArrow`` pass (``annotate``)
+that turns 1 document row into N sentence rows, each carrying its token
+array and its noun-phrase candidates (``candidates.chunk_terms``), built
+columnar and loading any per-worker state once per partition, never per
+row. ``tokenize`` is the flat token view of that table;
+``sentences_with_tokens`` regroups a token table for callers that start
+from tokens.
 
 The tagger here is a deterministic lexicon+suffix heuristic producing the
 coarse tags the candidate grammar needs (NOUN/PROPN/ADJ/NUM vs rest, the
@@ -24,10 +28,11 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import candidates as C
 
 TOKENS_SCHEMA = (
     "doc_id string, sentence_id int, token_id int, word string, lemma string, "
@@ -223,7 +228,9 @@ def _annotate_doc(doc_id: str, content: str) -> list[tuple]:
     each segment, reference corpus.py:513 nltk-sentence-split semantics,
     but without the O(segments x find) rescans). Sentences buffer so the
     NER/deprel passes (context-dependent) run once per sentence; POS/lemma
-    stay memoized per word type."""
+    stay memoized per word type. Rows come sentence by sentence in token
+    order, token ids 1-based within each sentence; ``annotate`` relies on
+    that layout to cut sentences without a regroup."""
     rows: list[tuple] = []
     sent_id = 1
     tok_id = 0
@@ -279,26 +286,99 @@ def _annotate_doc(doc_id: str, content: str) -> list[tuple]:
     return rows
 
 
-def _annotate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "sentence_id", "token_id", "word", "lemma", "pos",
-            "offset_begin", "offset_end", "ner", "deprel", "deprel_head_id"]
-    for pdf in batches:
-        out: list[tuple] = []
-        for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
+_ARROW_TYPE = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+_SPARK_TYPE = {v: k for k, v in _ARROW_TYPE.items()}
+
+
+def _arrow_fields(ddl: str) -> list[pa.Field]:
+    """pyarrow fields of a flat ``name type, ...`` DDL string."""
+    return [pa.field(n, _ARROW_TYPE[t]) for n, t in (c.split() for c in ddl.split(", "))]
+
+
+def _array_of_struct(fields: list[pa.Field]) -> str:
+    return "array<struct<" + ",".join(f"{f.name}:{_SPARK_TYPE[f.type]}" for f in fields) + ">>"
+
+
+# per-sentence arrays carry every field but the (doc_id, sentence_id) key
+_TOK_FIELDS = _arrow_fields(TOKENS_SCHEMA)[2:]
+_CAND_FIELDS = _arrow_fields(C.CANDIDATES_SCHEMA)[2:]
+ANNOTATED_SCHEMA = (
+    f"doc_id string, sentence_id int, toks {_array_of_struct(_TOK_FIELDS)}, "
+    f"cands {_array_of_struct(_CAND_FIELDS)}"
+)
+_ANNOTATED_ARROW = pa.schema(
+    _arrow_fields("doc_id string, sentence_id int")
+    + [pa.field("toks", pa.list_(pa.struct(_TOK_FIELDS))),
+       pa.field("cands", pa.list_(pa.struct(_CAND_FIELDS)))]
+)
+
+
+def _list_column(cols, offsets: list[int], fields: list[pa.Field]) -> pa.Array:
+    """``array<struct>`` column from flat child columns plus list offsets."""
+    children = [pa.array(c, f.type) for c, f in zip(cols, fields)]
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), pa.StructArray.from_arrays(children, fields=fields)
+    )
+
+
+def _annotate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """One output row per sentence, built columnar: the token rows of
+    every document in the batch are laid flat, a sentence starts where
+    ``token_id`` restarts at 1, and the candidate chunker runs on each
+    sentence's token slice, which ``_annotate_doc`` emits in token order."""
+    for rb in batches:
+        rows: list[tuple] = []
+        for doc_id, content in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
             if content:
-                out.extend(_annotate_doc(doc_id, content))
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: pd.Series(dtype=t) for c, t in zip(
-                cols, [object, np.int32, np.int32, object, object, object,
-                       np.int64, np.int64, object, object, np.int32])}
+                rows.extend(_annotate_doc(doc_id, content))
+        cols = list(zip(*rows)) if rows else [()] * (2 + len(_TOK_FIELDS))
+        starts = [i for i, tid in enumerate(cols[2]) if tid == 1]
+        bounds = starts + [len(rows)]
+        cands: list[tuple] = []
+        cand_offsets = [0]
+        for a, b in zip(bounds, bounds[1:]):
+            # cols[2:8]: token_id, word, lemma, pos, offset_begin, offset_end
+            cands.extend(C.chunk_terms(*(c[a:b] for c in cols[2:8])))
+            cand_offsets.append(len(cands))
+        cand_cols = list(zip(*cands)) if cands else [()] * len(_CAND_FIELDS)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([cols[0][a] for a in starts], pa.string()),
+                pa.array([cols[1][a] for a in starts], pa.int32()),
+                _list_column(cols[2:], bounds, _TOK_FIELDS),
+                _list_column(cand_cols, cand_offsets, _CAND_FIELDS),
+            ],
+            schema=_ANNOTATED_ARROW,
         )
 
 
-def tokenize(docs: DataFrame, strict: bool = False) -> DataFrame:
-    """``docs_clean -> tokens``: 1 doc row -> N token rows via mapInPandas.
+def annotate(docs: DataFrame) -> DataFrame:
+    """``docs_clean -> annotated sentences``: one ``mapInArrow`` pass,
+    one row per sentence ``(doc_id, sentence_id, toks, cands)``. ``toks``
+    holds the sentence's token fields of TOKENS_SCHEMA in token order,
+    ``cands`` its noun-phrase candidates (CANDIDATES_SCHEMA fields), so
+    tokens, sentences and candidates all derive from this one table
+    without a regroup shuffle or a second Python pass.
 
     Only (doc_id, content) are shipped through Arrow — column pruning is
-    explicit so a 100-TB scan never serializes unused columns into Python.
+    explicit so a large scan never serializes unused columns into Python.
+    """
+    return docs.select("doc_id", "content").mapInArrow(_annotate_arrow, ANNOTATED_SCHEMA)
+
+
+def tokens_of(annotated: DataFrame) -> DataFrame:
+    """The flat token table (TOKENS_SCHEMA) of an annotated table."""
+    return annotated.select("doc_id", "sentence_id", F.inline("toks"))
+
+
+def candidates_of(annotated: DataFrame) -> DataFrame:
+    """The candidate occurrence rows (CANDIDATES_SCHEMA), unfiltered."""
+    return annotated.select("doc_id", "sentence_id", F.inline("cands"))
+
+
+def tokenize(docs: DataFrame, strict: bool = False) -> DataFrame:
+    """``docs_clean -> tokens``: 1 doc row -> N token rows, the token
+    view of ``annotate``.
 
     ``strict=True`` marks the stanza integration point (reference
     corpus.py:227-232): it raises instead of running the deterministic
@@ -316,7 +396,7 @@ def tokenize(docs: DataFrame, strict: bool = False) -> DataFrame:
             "stanza.Pipeline once per partition), then call "
             "tokenize(docs, strict=False)"
         )
-    return docs.select("doc_id", "content").mapInPandas(_annotate_batches, TOKENS_SCHEMA)
+    return tokens_of(annotate(docs))
 
 
 def sentences_with_tokens(tokens: DataFrame) -> DataFrame:

@@ -1,9 +1,14 @@
 """End-to-end KG-construction pipeline (the reference's main.py:202-209
 stage chain, re-expressed as a checkpointed Spark DAG).
 
-    documents -> docs_clean -> tokens -> sentences -> candidates
+    documents -> docs_clean -> annotated sentences -> {tokens, candidates}
       -> df_counts -> term_scores(ranker) -> terms_topk -> mentions
       -> pairs -> pair_vectors -> clusters -> triples (+ entities, links)
+
+The annotated sentences (``nlp.annotate``: one Arrow pass, one row per
+sentence with its tokens and noun-phrase candidates) are persisted once;
+``tokens`` and ``candidates`` are inline projections of it and ``pairs``
+reads its token arrays, so no stage regroups tokens by sentence.
 
 Every stage checkpoints via ``CheckpointRunner`` (parquet + manifest +
 per-partition lineage), so a killed run resumes where it stopped.
@@ -43,32 +48,38 @@ def rank_scores(ranker: str, tokens: DataFrame, cands: DataFrame,
     raise ValueError(f"unknown ranker {ranker!r}")
 
 
+def annotated_sentences(docs_clean: DataFrame) -> DataFrame:
+    """The persisted annotated-sentence table (``nlp.annotate``) that
+    tokens, sentences and candidates all derive from; the caller releases
+    it after its terminal action."""
+    return nlp.annotate(size_bucketed(docs_clean, "content")).persist()
+
+
 def triples_chain(
     documents: DataFrame, ranker: str = "tfidf", n_terms: int = 15
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The composed docs→triples chain as ONE lazy DAG — no checkpoints,
-    persists only at the two nodes consumed twice (sentences feeds both
-    candidates and pairs; candidates feeds df/scores/mentions). Used by
-    the throughput bench and the streaming micro-batch sink.
+    persists only at the two nodes consumed more than once (the annotated
+    sentences feed candidates and pairs; candidates feeds df/scores/
+    mentions). Used by the throughput bench and the streaming micro-batch
+    sink.
 
     Returns (triples, cached); the caller unpersists ``cached`` after its
     terminal action.
     """
-    dc = corpus.docs_clean(documents)
-    tokens = nlp.tokenize(size_bucketed(dc, "content"))
-    sentences = nlp.sentences_with_tokens(tokens).persist()
-    cands = C.filter_candidates(C.mine_candidates(sentences)).persist()
+    annotated = annotated_sentences(corpus.docs_clean(documents))
+    cands = C.filter_candidates(nlp.candidates_of(annotated)).persist()
     # document_frequency's scalar collect is deliberate: it materializes
     # the cands cache BEFORE the broadcast-subquery jobs fire. A fully
     # lazy N (1-row broadcast DF) makes the df_tab and N broadcast jobs
-    # race to recompute the whole uncached tokenize chain concurrently —
+    # race to recompute the whole uncached annotate chain concurrently —
     # measured 8x slower, not faster.
     df_tab, n_docs = weighting.document_frequency(cands)
-    scores = rank_scores(ranker, tokens, cands, df_tab, n_docs)
+    scores = rank_scores(ranker, nlp.tokens_of(annotated), cands, df_tab, n_docs)
     topk = weighting.top_k_terms(scores, k=n_terms)
     ments = relations.mentions(cands, topk)
-    prs = relations.pairs(ments, sentences)
-    return relations.triples_from_pairs(prs), [sentences, cands]
+    prs = relations.pairs(ments, annotated.select("doc_id", "sentence_id", "toks"))
+    return relations.triples_from_pairs(prs), [annotated, cands]
 
 
 def run_pipeline(
@@ -111,24 +122,21 @@ def run_pipeline(
     ck = CheckpointRunner(spark, workdir, resume=resume, use_snapshots=use_snapshots)
 
     # in-memory mode persist policy (guide §5: cache only what is REUSED):
-    # docs_clean (tokenize + the n_docs count) and candidates (df/scores/
-    # mentions) have multiple consumers and stay cached; tokens is cached
-    # only for the rankers that read the token stream again; df_counts/
-    # term_scores/terms_topk/pairs/triples are straight-line single-
-    # consumer stages whose lazy persist was pure cache-write overhead.
-    # Durable (workdir) modes ignore the flag — checkpoints stay durable.
+    # docs_clean (annotate + the n_docs count), the annotated sentences
+    # (tokens, candidates and pairs) and candidates (df/scores/mentions)
+    # have multiple consumers and stay cached; tokens is a cheap inline
+    # over the annotated cache; df_counts/term_scores/terms_topk/pairs/
+    # triples are straight-line single-consumer stages whose lazy persist
+    # was pure cache-write overhead. Durable (workdir) modes ignore the
+    # flag — checkpoints stay durable.
     docs_clean = ck.run_stage("docs_clean", lambda: corpus.docs_clean(documents))
-    tokens = ck.run_stage(
-        "tokens",
-        lambda: nlp.tokenize(size_bucketed(docs_clean, "content")),
-        persist=ranker in ("yake", "singlerank", "positionrank"),
-    )
-    # grouped form consumed by both candidates and pairs; persist so the
-    # (doc, sentence) regroup shuffle happens once
-    sentences = nlp.sentences_with_tokens(tokens).persist()
+    # lazy: a resumed run whose tokens, candidates and pairs stages are
+    # all checkpointed never computes it
+    annotated = annotated_sentences(docs_clean)
+    tokens = ck.run_stage("tokens", lambda: nlp.tokens_of(annotated), persist=False)
     cands = ck.run_stage(
         "candidates",
-        lambda: C.filter_candidates(C.mine_candidates(sentences), stopwords=C.DEFAULT_STOPWORDS),
+        lambda: C.filter_candidates(nlp.candidates_of(annotated), stopwords=C.DEFAULT_STOPWORDS),
     )
     df_tab = ck.run_stage(
         "df_counts", lambda: weighting.document_frequency(cands)[0],
@@ -147,9 +155,14 @@ def run_pipeline(
         "mentions", lambda: relations.mentions(cands, topk), persist=linking
     )
     prs = ck.run_stage(
-        "pairs", lambda: relations.pairs(ments, sentences),
+        "pairs",
+        lambda: relations.pairs(ments, annotated.select("doc_id", "sentence_id", "toks")),
         persist=cluster_relations,
     )
+    if workdir is not None:
+        # durable stages were read back from their checkpoints, so nothing
+        # downstream reads the annotated cache any more
+        annotated.unpersist()
 
     if cluster_relations:
         embed = make_embedder()
@@ -214,6 +227,9 @@ def run_pipeline(
     out = {
         "docs_clean": docs_clean,
         "tokens": tokens,
+        # the annotated table itself: in-memory runs leave it cached for
+        # the caller to release (a projection of it would not unpersist it)
+        "sentences": annotated,
         "candidates": cands,
         "df_counts": df_tab,
         "term_scores": scores,

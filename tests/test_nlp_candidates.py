@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from kargo_spark import candidates as C
@@ -119,3 +121,88 @@ def test_kargen_lines_carry_real_ner(spark):
     lines = {r["line"] for r in IO.kargen_conll_lines(toks).collect() if r["line"]}
     assert any("\tB-ORG\t" in ln for ln in lines)
     assert any("\tB-GPE\t" in ln for ln in lines)
+
+
+def _row_counter(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_annotate_matches_tokenize_regroup_mine(spark):
+    """The fused annotate pass gives exactly what the two-pass path does:
+    the flat token rows, each sentence's ordered token array, and the
+    candidate occurrences, on null/blank/non-ASCII/abbreviation/newline
+    input and one giant document."""
+    base = "Mr. Smith of Acme Ltd. moved dangerous goods to the cool chain hub. "
+    docs = [
+        ("null", None),
+        ("empty", ""),
+        ("blank", "  \n\t  "),
+        ("accents", "Zürich Flughafen handled café freight — 3 tonnes. Señor Núñez said so."),
+        ("abbrev", "Mr. Jones met Acme Ltd. staff at Frankfurt airport. Air cargo grows!"),
+        ("lines", "First line cargo carrier\nSecond line hub operator\n\nThird freight lane"),
+        ("m1", base),
+        ("m2", base.replace("Smith", "Brown")),
+        ("m3", base.replace("cool", "cold")),
+        ("giant", base * 20),
+    ]
+    df = spark.createDataFrame(docs, "doc_id string, content string")
+    lengths = sorted(len(c or "") for _, c in docs)
+    assert len(docs[-1][1]) >= 20 * lengths[len(lengths) // 2]
+
+    annotated = nlp.annotate(df)
+    two_pass_sents = nlp.sentences_with_tokens(nlp.tokenize(df))
+
+    # tokens: the kernel's rows, unchanged by the columnar rebuild
+    expected = [r for d, c in docs if c for r in nlp._annotate_doc(d, c)]
+    assert _row_counter(nlp.tokens_of(annotated)) == Counter(expected)
+
+    fields = ("token_id", "word", "lemma", "pos", "offset_begin", "offset_end")
+
+    def by_sentence(sents):
+        return {
+            (r["doc_id"], r["sentence_id"]): [tuple(t[f] for f in fields) for t in r["toks"]]
+            for r in sents.collect()
+        }
+
+    fused = by_sentence(annotated)
+    assert fused == by_sentence(two_pass_sents)
+    assert {d for d, _ in fused} == {"accents", "abbrev", "lines", "m1", "m2", "m3", "giant"}
+
+    fused_cands = nlp.candidates_of(annotated)
+    two_pass_cands = C.mine_candidates(two_pass_sents)
+    assert fused_cands.count() > 0
+    assert _row_counter(fused_cands) == _row_counter(two_pass_cands)
+    assert _row_counter(
+        C.filter_candidates(fused_cands, stopwords=C.DEFAULT_STOPWORDS)
+    ) == _row_counter(C.filter_candidates(two_pass_cands, stopwords=C.DEFAULT_STOPWORDS))
+
+
+def test_released_caches_leave_no_persistent_rdds(spark, tmp_path):
+    """Two back-to-back triples_chain runs, each releasing its ``cached``
+    list, an in-memory run_pipeline whose cached outputs (the annotated
+    sentences included) are released, and a checkpointed run_pipeline
+    leave Spark's persistent RDD set as it was."""
+    from kargo_spark.pipeline import run_pipeline, triples_chain
+    from kargo_spark.synth import synth_documents
+
+    jsc = spark.sparkContext._jsc
+    docs = synth_documents(spark, n_rows=12)
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        triples, cached = triples_chain(docs)
+        assert triples.count() > 0
+        for df in cached:
+            df.unpersist()
+        assert jsc.getPersistentRDDs().size() == before
+
+    out = run_pipeline(spark, docs, None, cluster_relations=False, linking=False)
+    assert out["triples"].count() > 0
+    assert out["sentences"].is_cached
+    for df in out.values():
+        if df.is_cached:
+            df.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
+
+    out = run_pipeline(spark, docs, str(tmp_path), cluster_relations=False, linking=False)
+    assert out["triples"].count() > 0
+    assert jsc.getPersistentRDDs().size() == before

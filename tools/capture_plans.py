@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for named declared queries into
-plans/r06/<query>_<tag>.txt (judge evidence for OPTIMIZATION_r06.md).
+plans/r06/<query>_<tag>.txt (judge evidence for OPTIMIZATION_r06.md), or
+into the directory named by KARGO_PLAN_DIR.
 
 Usage: python tools/capture_plans.py <tag> [query ...]
 Defaults to the bench HEADLINE set. Uses sf0.001 so eager side jobs
@@ -30,7 +31,9 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("KARGO_PLAN_SF", "/root/testdata/sf0.001")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")
+    out_dir = os.environ.get("KARGO_PLAN_DIR") or os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06"
+    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="kargo_plans")
     qs = entrymod.queries()
