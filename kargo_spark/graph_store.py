@@ -29,10 +29,20 @@ def two_hop(triples: DataFrame, max_mid_degree: int | None = None) -> DataFrame:
     middles above a degree cutoff (same shape as the hot-shingle guard in
     dedup.ngram_jaccard_pairs) before the join.
     """
-    # collapse parallel edges (multiple preds between the same node pair,
-    # e.g. the pipeline's rel_0/rel_1 clusters) BEFORE the join: without
-    # this, a single a→b→c path is counted once per pred combination and
-    # path_support inflates by the cross-product
+    t1, t2 = hop_sides(triples, max_mid_degree)
+    return _paths(t1.join(t2, "mid"))
+
+
+def hop_sides(
+    triples: DataFrame, max_mid_degree: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The two join sides of the 2-hop self-join: t1 = (src, mid, s1)
+    keyed by a hop's object, t2 = (mid, dst, s2) keyed by its subject.
+    Parallel edges (several preds between one node pair, e.g. the
+    pipeline's rel_0/rel_1 clusters) are collapsed first: without that, a
+    single a→b→c path is counted once per pred combination and
+    path_support inflates by the cross-product. ``max_mid_degree``
+    anti-joins middles whose out-degree exceeds it from both sides."""
     hop = triples.groupBy("subj", "obj").agg(F.sum("support").alias("support"))
     t1 = hop.select(
         F.col("subj").alias("src"), F.col("obj").alias("mid"), F.col("support").alias("s1")
@@ -47,15 +57,38 @@ def two_hop(triples: DataFrame, max_mid_degree: int | None = None) -> DataFrame:
         )
         t1 = t1.join(hot, "mid", "left_anti")
         t2 = t2.join(hot, "mid", "left_anti")
+    return t1, t2
+
+
+def _paths(joined: DataFrame) -> DataFrame:
+    """(src, mid, s1) ⋈ (mid, dst, s2) rows -> one row per (src, dst):
+    n_paths = #distinct middles, path_support = sum of min(s1, s2)."""
     return (
-        t1.join(t2, "mid")
-        .filter(F.col("src") != F.col("dst"))
+        joined.filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(
             F.countDistinct("mid").alias("n_paths"),
             F.sum(F.least("s1", "s2")).alias("path_support"),
         )
     )
+
+
+def _assert_one_shuffle(result: DataFrame, what: str) -> None:
+    """Raise unless the composed 2-hop query plans at most ONE
+    hash-partitioning Exchange — the final (src, dst) aggregation; a
+    second one means the bucketed join itself shuffled. Probes the FULL
+    composed query (not just the bare join subplan — the consumer query
+    is what actually executes), at plan time: AQE can only downgrade the
+    join to broadcast (still shuffle-free), never add an Exchange this
+    probe would miss."""
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    n_exchanges = plan.count("Exchange hashpartitioning")
+    if n_exchanges > 1:
+        raise AssertionError(
+            f"{what} planned {n_exchanges} shuffles (expected only the "
+            "final aggregation) — bucket layout not engaged (check bucket "
+            "counts / join key):\n" + plan
+        )
 
 
 def merge_triples(existing: DataFrame, new: DataFrame) -> DataFrame:
@@ -142,47 +175,12 @@ def two_hop_bucketed(
     from .storage import write_bucketed
 
     spark = triples.sparkSession
-    hop = triples.groupBy("subj", "obj").agg(F.sum("support").alias("support"))
-    t1 = hop.select(
-        F.col("subj").alias("src"), F.col("obj").alias("mid"), F.col("support").alias("s1")
-    )
-    t2 = hop.select(
-        F.col("subj").alias("mid"), F.col("obj").alias("dst"), F.col("support").alias("s2")
-    )
-    if max_mid_degree is not None:
-        hot = (
-            t2.groupBy("mid").agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") > max_mid_degree)
-        )
-        t1 = t1.join(hot, "mid", "left_anti")
-        t2 = t2.join(hot, "mid", "left_anti")
+    t1, t2 = hop_sides(triples, max_mid_degree)
     write_bucketed(t1, f"{prefix}_t1", ["mid"], n_buckets)
     write_bucketed(t2, f"{prefix}_t2", ["mid"], n_buckets)
-    joined = spark.table(f"{prefix}_t1").join(spark.table(f"{prefix}_t2"), "mid")
-    result = (
-        joined.filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(
-            F.countDistinct("mid").alias("n_paths"),
-            F.sum(F.least("s1", "s2")).alias("path_support"),
-        )
-    )
+    result = _paths(spark.table(f"{prefix}_t1").join(spark.table(f"{prefix}_t2"), "mid"))
     if assert_shuffle_free:
-        # probe the FULL composed query (not just the bare join subplan —
-        # the consumer query is what actually executes): the only
-        # hash-partitioning Exchange allowed is the final (src, dst)
-        # aggregation; a second one means the join itself shuffled and the
-        # bucket layout was not engaged. Checked at plan time; AQE can
-        # only downgrade the join to broadcast (still shuffle-free), never
-        # add an Exchange this probe would miss.
-        plan = result._jdf.queryExecution().executedPlan().toString()
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        if n_exchanges > 1:
-            raise AssertionError(
-                f"bucketed 2-hop query planned {n_exchanges} shuffles "
-                "(expected only the final aggregation) — bucket layout not "
-                "engaged (check bucket counts / join key):\n" + plan
-            )
+        _assert_one_shuffle(result, "bucketed 2-hop query")
     return result
 
 
@@ -234,26 +232,11 @@ def two_hop_from_store(
     repeated graph queries never re-shuffle the store. Same semantics as
     ``two_hop`` (the hub guard, if any, was applied at write time).
     """
-    joined = spark.table(f"{prefix}_hop_t1").join(
-        spark.table(f"{prefix}_hop_t2"), "mid"
-    )
-    result = (
-        joined.filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(
-            F.countDistinct("mid").alias("n_paths"),
-            F.sum(F.least("s1", "s2")).alias("path_support"),
-        )
+    result = _paths(
+        spark.table(f"{prefix}_hop_t1").join(spark.table(f"{prefix}_hop_t2"), "mid")
     )
     if assert_shuffle_free:
-        plan = result._jdf.queryExecution().executedPlan().toString()
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        if n_exchanges > 1:
-            raise AssertionError(
-                f"2-hop over the persisted store planned {n_exchanges} "
-                "shuffles (expected only the final aggregation) — bucket "
-                "layout not engaged:\n" + plan
-            )
+        _assert_one_shuffle(result, "2-hop over the persisted store")
     return result
 
 
@@ -287,14 +270,24 @@ def merge_into_graph_store(
     Cost model per ingest: the triples MERGE is O(batch) shuffle + an
     in-place store scan; the derived node/edge/hop tables are then
     re-aggregated from the persisted merged scan — one bucketed scan +
-    one shuffle each, O(store) but embarrassingly parallel, no join. A
-    fully incremental derived refresh (degree deltas only for first-seen
+    one shuffle each, O(store) but embarrassingly parallel, no join.
+    Every table write hash-partitions on its bucket key (one file per
+    bucket, see ``storage.write_bucketed``); that includes the merged
+    triples, whose rows are already bucket-aligned but which Spark
+    cannot see as partitioned (a full outer join reports no output
+    partitioning), so their write also shuffles O(store). Measured on
+    the ``graph_ingest`` store of perfbench (seed 1, local[4], 4-vCPU
+    VM, ``tools/bucketed_write_plans.py``): the derived writes were
+    0.77-0.80 of the store-write time of each increment (7.6 of 9.5 s
+    at the third) while they wrote tasks × buckets files, and are
+    0.56-0.61 (3.2 of 5.5 s) at one file per bucket. A fully
+    incremental derived refresh (degree deltas only for first-seen
     triple keys) is possible since every column is a sum/count, but
     needs new-key lineage out of the merge join; the simple recompute is
     the deliberate trade until a profile shows the derived pass, not the
     merge, dominating.
     """
-    from .storage import write_graph_bucketed
+    from .storage import drop_table, write_graph_bucketed
 
     # subset co-partitioning must be allowed for the (subj, obj) bucket
     # layout to serve the 3-key merge join (see write_graph_bucketed);
@@ -346,58 +339,13 @@ def merge_into_graph_store(
     # location with it (probed r05: bucketing spec survives the rename).
     for suf in ["_nodes", "_edges", "_triples", "_hop_t1", "_hop_t2"]:
         has_stage = spark.catalog.tableExists(f"{stage}{suf}")
-        existed = spark.catalog.tableExists(f"{prefix}{suf}")
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}{suf}")
-        _sweep_dangling_location(spark, f"{prefix}{suf}", claimed=existed)
+        drop_table(spark, f"{prefix}{suf}")
         if has_stage:
             spark.sql(f"ALTER TABLE {stage}{suf} RENAME TO {prefix}{suf}")
         # else: the new generation has no such table — the stale one from
         # the previous generation is dropped rather than left serving the
         # OLD graph (a merge without two_hop_ready retires the hop tables)
     return spark.table(store_tbl)
-
-
-def _sweep_dangling_location(spark, table: str, claimed: bool = False) -> None:
-    """After DROP TABLE, clear a leftover default-location dir (a fresh
-    in-memory metastore over an old warehouse can leave one) so the
-    following catalog RENAME's location move cannot collide.
-
-    ``claimed=True`` means the catalog owned this table immediately before
-    the DROP, so whatever remains at the default location was that table's
-    data — sweep freely. When the catalog did NOT claim it, the dir could
-    be an unrelated same-named user directory inside a pointed-at
-    warehouse: apply the same looks-like-a-Spark-dataset check as
-    ``storage.write_bucketed`` and REFUSE to delete anything foreign
-    (r05 verdict what's-wrong #3)."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    path = None
-    if warehouse.startswith("file:"):
-        from urllib.parse import urlparse
-
-        path = urlparse(warehouse).path
-    elif warehouse.startswith("/"):
-        path = warehouse
-    if path and "." not in table:
-        import os
-        import shutil
-
-        loc = f"{path}/{table.lower()}"
-        if not claimed and os.path.isdir(loc):
-            foreign = [
-                n
-                for n in os.listdir(loc)
-                if not (
-                    n.startswith("part-") or n.startswith("_") or n.startswith(".")
-                )
-            ]
-            if foreign:
-                raise RuntimeError(
-                    f"graph-store swap: {loc} exists, is not claimed by the "
-                    f"catalog, and does not look like a Spark dataset "
-                    f"(unexpected entries: {foreign[:5]}); refusing to delete "
-                    f"it — move it aside or choose another prefix/warehouse."
-                )
-        shutil.rmtree(loc, ignore_errors=True)
 
 
 def graph_tables(triples: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -26,74 +26,94 @@ def write_bucketed(
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed+sorted managed table.
+    """Persist ``df`` as a bucketed+sorted managed table, ONE file per
+    bucket.
 
     ``n_buckets`` sizes the co-location grain: pick it like
     ``spark.sql.shuffle.partitions`` — enough buckets that one bucket of
     the biggest table fits an executor core's working memory at target
     scale. Sorting within buckets makes the later SortMergeJoin skip its
     sort too.
+
+    One file per bucket: the bucketed writer does NOT shuffle — each
+    write task opens one file for every bucket its rows hash to, so a
+    frame not partitioned on the bucket key lands as tasks × buckets
+    files (a 2-hop side table of a 40-document store: 226 files for 32
+    buckets, 661 after three merges), and every later bucketed scan
+    opens all of them. Hash-partitioning to exactly ``n_buckets``
+    partitions on the bucket columns first uses the same
+    ``HashPartitioning(bucket_cols, n_buckets)`` expression Spark
+    computes the bucket id with, so each task holds exactly one bucket
+    and writes one file. The explicit count keeps AQE from coalescing or
+    splitting the partitions. An input the planner already knows to be
+    hash-partitioned that way plans no extra Exchange; one it cannot see
+    as partitioned (a full outer join's output) is shuffled even when
+    its rows are bucket-aligned. Trade-off: a hub bucket is written (and
+    sorted, spilling if it must) by one task — the task that already
+    reads it in every bucketed join.
     """
     if mode == "overwrite":
         # a managed-table location can outlive its catalog entry (fresh
         # in-memory metastore over an old warehouse dir): overwrite would
         # then fail with LOCATION_ALREADY_EXISTS, so drop + clear first.
-        # Handles file:-scheme AND bare-path local warehouse dirs;
-        # db-qualified names only DROP (their location layout is the
-        # metastore's business — the save will fail loudly if dangling).
-        # The dir is removed ONLY when confirmed dangling — no catalog
-        # entry claims it AND it looks like a Spark-written dataset
-        # (parquet parts/_SUCCESS, no foreign files). A same-named user
-        # directory in a pointed-at warehouse raises instead of being
-        # silently deleted (r04 ADVICE low #3).
-        spark = df.sparkSession
-        existed = spark.catalog.tableExists(table)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        if "." not in table:
-            path = None
-            if warehouse.startswith("file:"):
-                from urllib.parse import urlparse
-
-                path = urlparse(warehouse).path
-            elif warehouse.startswith("/"):
-                path = warehouse
-            if path:
-                import os
-                import shutil
-
-                loc = f"{path}/{table.lower()}"
-                if existed:
-                    # DROP of a managed table already cleared its data;
-                    # sweep any leftover dir at the default location (it
-                    # was this table's).
-                    shutil.rmtree(loc, ignore_errors=True)
-                elif os.path.isdir(loc):
-                    foreign = [
-                        n
-                        for n in os.listdir(loc)
-                        if not (
-                            n.startswith("part-")
-                            or n.startswith("_")
-                            or n.startswith(".")
-                        )
-                    ]
-                    if foreign:
-                        raise RuntimeError(
-                            f"write_bucketed(overwrite): {loc} exists, is not "
-                            f"claimed by the catalog, and does not look like a "
-                            f"Spark dataset (unexpected entries: {foreign[:5]}); "
-                            f"refusing to delete it — move it aside or choose "
-                            f"another table name/warehouse."
-                        )
-                    shutil.rmtree(loc, ignore_errors=True)
+        drop_table(df.sparkSession, table)
     writer = (
-        df.write.mode(mode)
+        df.repartition(n_buckets, *bucket_cols)
+        .write.mode(mode)
         .bucketBy(n_buckets, *bucket_cols)
         .sortBy(*(sort_cols or bucket_cols))
         .format("parquet")
     )
     writer.saveAsTable(table)
+
+
+def drop_table(spark: SparkSession, table: str) -> None:
+    """DROP ``table`` and clear a leftover dir at its default warehouse
+    location, so a following overwrite or catalog RENAME into that
+    location cannot collide (a fresh in-memory metastore over an old
+    warehouse leaves such dirs behind).
+
+    If the catalog claimed the table right before the DROP, whatever
+    remains at the default location was that table's data — it is swept
+    freely. Otherwise the dir could be an unrelated same-named user
+    directory inside a pointed-at warehouse: it is removed ONLY when it
+    looks like a Spark-written dataset (parquet parts, ``_SUCCESS``, no
+    foreign entries), and anything foreign makes this RAISE instead of
+    deleting it. Handles file:-scheme and bare-path local warehouse
+    dirs; db-qualified names only DROP (their location layout is the
+    metastore's business — a colliding save fails loudly)."""
+    claimed = spark.catalog.tableExists(table)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
+    path = None
+    if warehouse.startswith("file:"):
+        from urllib.parse import urlparse
+
+        path = urlparse(warehouse).path
+    elif warehouse.startswith("/"):
+        path = warehouse
+    if path and "." not in table:
+        import os
+        import shutil
+
+        loc = f"{path}/{table.lower()}"
+        if not claimed and os.path.isdir(loc):
+            foreign = [
+                n
+                for n in os.listdir(loc)
+                if not (
+                    n.startswith("part-") or n.startswith("_") or n.startswith(".")
+                )
+            ]
+            if foreign:
+                raise RuntimeError(
+                    f"drop_table({table}): {loc} exists, is not claimed by "
+                    f"the catalog, and does not look like a Spark dataset "
+                    f"(unexpected entries: {foreign[:5]}); refusing to delete "
+                    f"it — move it aside or choose another table name or "
+                    f"warehouse."
+                )
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:
@@ -150,7 +170,7 @@ def write_graph_bucketed(
     ``max_mid_degree`` applies ``two_hop``'s hub guard at WRITE time (the
     right place at scale: hot middles are excluded once, not per query).
     """
-    from .graph_store import graph_tables
+    from .graph_store import graph_tables, hop_sides
 
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -174,24 +194,7 @@ def write_graph_bucketed(
     write_bucketed(nodes, nodes_tbl, ["node_id"], n_buckets)
     write_bucketed(edges, edges_tbl, ["src"], n_buckets)
     if two_hop_ready:
-        from pyspark.sql import functions as F
-
-        hop = persisted.groupBy("subj", "obj").agg(F.sum("support").alias("support"))
-        t1 = hop.select(
-            F.col("subj").alias("src"), F.col("obj").alias("mid"),
-            F.col("support").alias("s1"),
-        )
-        t2 = hop.select(
-            F.col("subj").alias("mid"), F.col("obj").alias("dst"),
-            F.col("support").alias("s2"),
-        )
-        if max_mid_degree is not None:
-            hot = (
-                t2.groupBy("mid").agg(F.count(F.lit(1)).alias("d"))
-                .filter(F.col("d") > max_mid_degree)
-            )
-            t1 = t1.join(hot, "mid", "left_anti")
-            t2 = t2.join(hot, "mid", "left_anti")
+        t1, t2 = hop_sides(persisted, max_mid_degree)
         write_bucketed(t1, f"{prefix}_hop_t1", ["mid"], n_buckets)
         write_bucketed(t2, f"{prefix}_hop_t2", ["mid"], n_buckets)
     return nodes_tbl, edges_tbl

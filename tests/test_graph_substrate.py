@@ -13,6 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from kargo_spark.graph_store import (
+    graph_tables,
+    hop_sides,
     merge_into_graph_store,
     merge_triples,
     two_hop,
@@ -86,6 +88,14 @@ def test_incremental_ingest_parity_and_snapshots(spark, store, tmp_path):
     t2, cached = triples_chain(docs2)
     expect = merge_triples(triples1, t2.select("subj", "pred", "obj", "support"))
     assert _rows(merged) == _rows(expect)
+    # the refreshed derived tables equal the same tables derived
+    # unbucketed from the contract op's result, row for row
+    nodes, edges = graph_tables(expect)
+    hop_t1, hop_t2 = hop_sides(expect)
+    for suf, want in [("_nodes", nodes), ("_edges", edges),
+                      ("_hop_t1", hop_t1), ("_hop_t2", hop_t2)]:
+        got = spark.table(f"{PREFIX}{suf}")
+        assert _rows(got) == _rows(want.select(*got.columns)), suf
     for df in cached:
         df.unpersist()
     # supports accumulated: total support = batch1 + batch2

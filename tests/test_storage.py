@@ -3,6 +3,10 @@ plan WITHOUT a shuffle on the bucketed key."""
 
 from __future__ import annotations
 
+import os
+import re
+from urllib.parse import urlparse
+
 from pyspark.sql import functions as F
 
 from kargo_spark import storage
@@ -49,10 +53,43 @@ def test_write_graph_bucketed_roundtrip(spark):
         assert storage.bucketed_join_is_shuffle_free(
             spark, edges_tbl, edges_tbl, ["src"]
         )
-        # the raw triples are persisted bucketed on the full key too (the
-        # merge substrate)
+        # the raw triples are persisted too, bucketed on (subj, obj) and
+        # sorted by the full key (the merge substrate)
         assert storage.read_table(spark, "t_kg_triples").count() == 3
     finally:
         spark.sql("DROP TABLE IF EXISTS t_kg_nodes")
         spark.sql("DROP TABLE IF EXISTS t_kg_edges")
         spark.sql("DROP TABLE IF EXISTS t_kg_triples")
+
+
+def _table_files(spark, table):
+    loc = next(
+        r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        if r["col_name"] == "Location"
+    )
+    return [n for n in os.listdir(urlparse(loc).path) if n.startswith("part-")]
+
+
+def test_write_bucketed_writes_one_file_per_bucket(spark):
+    """A write task opens one file per bucket its rows hash to, so an
+    input not partitioned on the bucket key lands as tasks x buckets
+    files; write_bucketed hash-partitions on the key first, so each
+    bucket is one file."""
+    df = spark.range(0, 4000, 1, numPartitions=16).select(
+        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
+    )
+    storage.write_bucketed(df, "t_one_file", ["k"], n_buckets=8)
+    try:
+        parts = _table_files(spark, "t_one_file")
+        # Spark's bucket-file naming: part-<task>-<uuid>_<bucket id>.c000...
+        bucket_ids = [re.search(r"_(\d+)(?:\..*)?$", n).group(1) for n in parts]
+        assert 0 < len(parts) <= 8, parts
+        assert len(set(bucket_ids)) == len(parts), parts
+        got = storage.read_table(spark, "t_one_file")
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
+        assert storage.bucketed_join_is_shuffle_free(
+            spark, "t_one_file", "t_one_file", ["k"]
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_one_file")
